@@ -40,13 +40,14 @@ except ImportError:  # pragma: no cover
 #   3. then the remaining already-verified queries, same interleave
 #      order.
 # ``_DRIVER_VERIFIED`` is an EXPLICIT COMMITTED CONSTANT -- the union of
-# the key sets of CORRECTNESS_r01..r12.json -- bumped intentionally each
+# the key sets of CORRECTNESS_r01..r13.json -- bumped intentionally each
 # round by appending the new round's window keys (ADVICE r11: deriving
 # the ordering from artifact-file globbing made a fresh clone of HEAD and
 # the local tree disagree whenever the round's own artifact was
-# untracked; a source-level constant cannot drift).  With 141 verified /
-# 34 pending at round 13, the r13 window is the full remaining
-# first-time set plus 16 retouched re-verification slots.
+# untracked; a source-level constant cannot drift).  The r13 window was
+# the 34 first-time queries plus 16 retouched slots; with its keys
+# appended all 175 declared queries are verified, so the window now
+# opens with the retouched tier.
 
 _DRIVER_VERIFIED = frozenset((
     "above_average_orders", "ann_cosine_topk", "ann_filtered_topk",
@@ -98,6 +99,19 @@ _DRIVER_VERIFIED = frozenset((
     "split_contamination", "stratified_sample", "temperature_mix",
     "token_budget", "tokenizer_fertility", "top_terms",
     "user_erasure_audit", "window_dedup",
+    # --- r13 window (CORRECTNESS_r13.json: 48 hash-matched, 2 no-oracle) ---
+    "ann_ivf_absorb", "ann_ivf_drift", "anomaly_alerts_coloc",
+    "anomaly_alerts_family", "bm25_search", "campaign_spend_coloc",
+    "campaign_spend_family", "corpus_shuffle", "ctr_hourly_coloc",
+    "ctr_hourly_family", "doc_chunks", "embedding_coverage",
+    "engagement_hourly_coloc", "engagement_hourly_family",
+    "forecast_revenue_change", "group_reservoir", "length_outliers",
+    "linear_attribution", "lm_quality", "market_share",
+    "market_share_coloc", "numeric_profile", "packing_offset",
+    "pit_feature_join", "position_attribution", "retention_cohorts",
+    "source_mix_weights", "table_profile", "table_profile_approx",
+    "table_profile_served", "tfidf_doc_pairs", "token_budget_mix",
+    "token_budget_shards", "volume_shipping_coloc",
 ))
 
 #: Queries whose semantics-bearing operator code changed in r12 or r13

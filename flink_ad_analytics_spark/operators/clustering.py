@@ -1,40 +1,35 @@
-"""K-means clustering over embedding columns, and the IVF-kmeans ANN
-index it trains.
+"""K-means clustering over embedding columns, and the IVF and PQ ANN
+indexes it trains.
 
-Distributed Lloyd's, Spark-shaped:
+One family, on the fixed-point integer lattice (second half of this
+module): every declared clustering query and the streaming IVF absorb
+run on it.
 
 * **Init** is a deterministic hash-ordered sample: the k vectors with
   the smallest md5(seed:vec_id) -- reproducible across partitioning,
   re-runs, and engines (same trick as operators/sampling.py).
-* **Assignment + partial aggregation happen in one Arrow pass.**
-  ``mapInPandas`` scores each Arrow batch against the broadcast
-  centroid matrix with a single BLAS matmul (argmin of squared
-  distance via the ||x||^2 - 2 x.c + ||c||^2 expansion) and emits
-  ONE row per (batch, cluster): count + component-sum vector. The
-  shuffle that follows moves only n_batches x k tiny rows -- the
-  classic mini-batch-sum shape that keeps a 100 TB iteration's
-  exchange in kilobytes.
-* **Update** reduces those partials per cluster on the driver (k x d
-  doubles -- bounded by design, like any k-means implementation's
-  centroid state) and re-broadcasts.
+* **Fit** (``kmeans_fixedpoint``, ``pq_fixedpoint``): a fixed number
+  of Lloyd updates in exact integer arithmetic on floor-quantized
+  coordinates, ties to the lowest cluster id. Each iteration is one
+  corpus pass plus a (cluster, dim)-grain partial-sum shuffle; the
+  k-row centroid state is localCheckpointed per round.
+* **Assign / serve** (``kmeans_fixedpoint_assign``,
+  ``ivf_fixedpoint_topk``, ``pq_fixedpoint_codes``,
+  ``pq_fixedpoint_topk``): exact integer squared distances, so probe
+  choice, codes and rankings are engine-reproducible and every
+  serving query is a full DuckDB-oracle row.
 
-Iterations stop at ``max_iter`` or when no assignment changes the
-centroids beyond ``tol``. Total cost: one corpus pass per iteration,
-no corpus-sized shuffle ever.
-
-Determinism: float64 BLAS matmuls are deterministic for a fixed
-reduction order (NumPy's is), init is hash-pinned, and ties in argmin
-break to the lowest cluster id (np.argmin). Two runs on the same data
-produce identical centroids; tests assert it.
-
-``kmeans_step_stats`` is the oracle bridge: ONE Lloyd assignment step
-from the hash-sampled init, computed with exact DECIMAL distance folds
-(the operators/similarity.py recipe), so the core of the iteration is
-value-provable against DuckDB even though the full iterative fit is
-not SQL-expressible.
+The exact-decimal bridge (``kmeans_step_stats``,
+``kmeans_update_stats``, ``pq_codes_stats``, ``semantic_dedup``) runs
+ONE Lloyd assignment step from the float hash-sampled init with exact
+DECIMAL distance folds (the operators/similarity.py recipe), so both
+halves of a float Lloyd iteration and the static-codebook PQ encode
+are value-provable against DuckDB.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -80,193 +75,6 @@ def hash_sampled_centroids(
     )
 
 
-def kmeans_fit(
-    emb: DataFrame,
-    k: int = 10,
-    max_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 11,
-    tol: float = 1e-6,
-):
-    """Lloyd's k-means; returns (centroids ndarray [k, d], inertia
-    history list[float]).
-
-    Each iteration is one Arrow-batched corpus pass emitting per-batch
-    per-cluster (count, sum-vector, inertia) partials; the driver
-    reduces k x d state. See module docstring for the scale argument.
-    """
-    import numpy as np
-
-    init = hash_sampled_centroids(emb, k, id_col, vec_col, seed).collect()
-    cents = np.array(
-        [r.centroid for r in sorted(init, key=lambda r: r.centroid_id)],
-        dtype=np.float64,
-    )
-    spark = emb.sparkSession
-    # vec only: the id column would be Arrow-shipped through every
-    # Lloyd iteration unread (pq_fit's loop already selects this way).
-    data = emb.select(F.col(vec_col).alias("vec"))
-    history: list[float] = []
-    for _ in range(max_iter):
-        bc = spark.sparkContext.broadcast(cents)
-
-        def partials(batches):
-            import numpy as np
-            import pandas as pd
-
-            c = bc.value
-            c_sq = (c * c).sum(axis=1)
-            for pdf in batches:
-                x = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-                d2 = (
-                    (x * x).sum(axis=1)[:, None]
-                    - 2.0 * (x @ c.T)
-                    + c_sq[None, :]
-                )
-                a = d2.argmin(axis=1)
-                rows = []
-                for cl in np.unique(a):
-                    m = a == cl
-                    rows.append(
-                        {
-                            "cluster": int(cl),
-                            "n": int(m.sum()),
-                            "s": x[m].sum(axis=0).tolist(),
-                            "inertia": float(d2[m, cl].sum()),
-                        }
-                    )
-                yield pd.DataFrame(rows)
-
-        agg = data.mapInPandas(
-            partials, "cluster int, n long, s array<double>, inertia double"
-        ).collect()
-        counts = np.zeros(k)
-        sums = np.zeros_like(cents)
-        inertia = 0.0
-        for r in agg:
-            counts[r.cluster] += r.n
-            sums[r.cluster] += np.array(r.s)
-            inertia += r.inertia
-        history.append(inertia)
-        new = cents.copy()  # empty clusters keep their old centroid
-        nz = counts > 0
-        new[nz] = sums[nz] / counts[nz, None]
-        shift = float(np.abs(new - cents).max())
-        cents = new
-        bc.destroy()
-        if shift < tol:
-            break
-    return cents, history
-
-
-def kmeans_predict(
-    emb: DataFrame,
-    centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "cluster",
-) -> DataFrame:
-    """(id, cluster): argmin-distance assignment, one Arrow pass."""
-    import numpy as np
-
-    bc = emb.sparkSession.sparkContext.broadcast(
-        np.asarray(centroids, dtype=np.float64)
-    )
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        c = bc.value
-        c_sq = (c * c).sum(axis=1)
-        for pdf in batches:
-            x = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            d2 = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ c.T) + c_sq[None, :]
-            yield pd.DataFrame(
-                {"__id": pdf["__id"], out_col: d2.argmin(axis=1)}
-            )
-
-    out = emb.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("vec")
-    ).mapInPandas(assign, f"__id long, {out_col} int")
-    return out.select(F.col("__id").alias(id_col), out_col)
-
-
-def ivf_kmeans_topk(
-    emb: DataFrame,
-    centroids,
-    *,
-    query_filter,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN over learned (k-means) coarse centroids.
-
-    Candidates are inverted-listed by nearest centroid; each query
-    probes its ``nprobe`` nearest lists. Versus the sign-bucket IVF,
-    the lists are data-adaptive (balanced for clustered corpora) and
-    recall is tunable via nprobe. The bucket id is the shuffle key;
-    per-list work is bounded by list size, and the query side is
-    broadcast -- the standard serving shape.
-
-    Scores are float64 cosines rounded to 6dp with id tiebreaks
-    (same comparability recipe as cosine_topk_vectorized).
-    """
-    import numpy as np
-
-    assigned = kmeans_predict(emb, centroids, id_col, vec_col, "bucket")
-    cands = emb.join(assigned, id_col).select(
-        F.col(id_col).alias("c_id"),
-        F.col("bucket"),
-        F.col(vec_col).alias("c_emb"),
-    )
-    c = np.asarray(centroids, dtype=np.float64)
-    q_rows = emb.filter(query_filter).select(id_col, vec_col).collect()
-    if not q_rows:
-        return emb.sparkSession.createDataFrame(
-            [], "q_id long, c_id long, cosine double, rank long"
-        )
-    probes = []
-    for r in q_rows:
-        x = np.asarray(r[1], dtype=np.float64)
-        d2 = ((c - x) ** 2).sum(axis=1)
-        for b in np.argsort(d2, kind="stable")[:nprobe]:
-            probes.append((int(r[0]), list(map(float, x)), int(b)))
-    spark = emb.sparkSession
-    queries = F.broadcast(
-        spark.createDataFrame(
-            probes, "q_id long, q_emb array<double>, bucket int"
-        )
-    )
-    dot = (
-        "aggregate(zip_with(q_emb, c_emb, (x, y) -> x * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (a, t) -> a + t)"
-    )
-    nq = (
-        "sqrt(aggregate(zip_with(q_emb, q_emb, (x, y) -> x * y), "
-        "CAST(0 AS DOUBLE), (a, t) -> a + t))"
-    )
-    nc = (
-        "sqrt(aggregate(zip_with(c_emb, c_emb, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (a, t) -> a + t))"
-    )
-    scored = (
-        cands.join(queries, "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("cosine", F.round(F.expr(f"{dot} / ({nq} * {nc})"), 6))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
-
-
 #: Double-prescreen margin for the literal-centroid argmin below. The
 #: plain double fold deviates from the exact decimal fold by far less
 #: than this: per term, the decimal path rounds to 16dp (<= 5e-17) and
@@ -276,18 +84,31 @@ def ivf_kmeans_topk(
 #: whose exact d2 could win (including exact 12dp ties, which must
 #: reach the cid tie-break) therefore sit within 2 * 1e-11 of the
 #: double minimum -- five orders of magnitude inside this margin.
+#:
+#: Domain: each exact term (x - y)^2 is cast to DECIMAL(20,16), which
+#: holds at most 4 integer digits, so the exact fold is defined only
+#: while every per-coordinate |x - y| < 100 (|x| < 50 on both sides
+#: suffices); beyond that the term cast overflows.
 _PRESCREEN_EPS = "1.0E-6"
 
 
 def _dbl_arr_sql(vals) -> str:
     """A literal ARRAY<DOUBLE> (repr() emits shortest round-trip
     decimals, and the CAST pins the element type: bare fractional
-    literals parse as DECIMAL in Spark SQL)."""
-    return (
-        "CAST(array("
-        + ",".join(repr(float(v)) for v in vals)
-        + ") AS ARRAY<DOUBLE>)"
-    )
+    literals parse as DECIMAL in Spark SQL).
+
+    Precondition: every value is finite. repr() would print NaN/Inf as
+    ``nan``/``inf``, which Spark SQL reads as unknown column names, so
+    they are rejected here with a ValueError instead of an opaque
+    analysis error at query build."""
+    vals = [float(v) for v in vals]
+    if not all(math.isfinite(v) for v in vals):
+        raise ValueError(
+            "centroid literals must be finite: a NaN/Inf embedding was "
+            "sampled as a centroid, and the exact-decimal argmin is "
+            "defined only on finite inputs"
+        )
+    return "CAST(array(" + ",".join(map(repr, vals)) + ") AS ARRAY<DOUBLE>)"
 
 
 def _argmin_winner_sql(cent_arrs: list[list[float]], vec_expr: str) -> str:
@@ -307,7 +128,7 @@ def _argmin_winner_sql(cent_arrs: list[list[float]], vec_expr: str) -> str:
     decimal work itself drops k-fold, structs are allocated only for
     survivors, and the pair blow-up + argmin window exchange disappear
     from the consumers' plans entirely (the k centroid rows ride in as
-    literals -- the same bounded driver state kmeans_fit/pq_fit
+    literals -- the same bounded driver state the fixed-point fits
     already collect()).
 
     The outer single-element aggregate binds the double-distance array
@@ -351,8 +172,7 @@ def _collect_init_centroids(
     emb: DataFrame, k: int, id_col: str, vec_col: str, seed: int
 ) -> list[list[float]]:
     """The hash-sampled init as driver-side literals, ordered by
-    centroid_id (k <= 16 rows -- bounded state, the collect
-    kmeans_fit/pq_fit already do)."""
+    centroid_id (k <= 16 rows -- bounded driver state)."""
     rows = hash_sampled_centroids(emb, k, id_col, vec_col, seed).collect()
     return [
         [float(x) for x in r.centroid]
@@ -465,14 +285,11 @@ def kmeans_update_stats(
     gate).
 
     Together with kmeans_step_stats (the assignment half), both halves
-    of a Lloyd iteration are value-proven against the DuckDB oracle;
-    the full fit (kmeans_fit) composes exactly these two computations
-    iteratively in the fused Arrow pass.
+    of a Lloyd iteration are value-proven against the DuckDB oracle.
 
     Scale: posexplode fans each vector into d rows, but the per-(k x d)
     aggregation partial-aggregates map-side, so the exchange carries at
-    most n_partitions x k x d rows -- same order as the fused pass's
-    partial sums.
+    most n_partitions x k x d rows.
     """
     # r13: the assignment rides the SAME projection as the dimension
     # explode (one `inline` Generate binds the winner struct per row,
@@ -511,247 +328,6 @@ def kmeans_update_stats(
     )
 
 
-def pq_fit(
-    emb: DataFrame,
-    *,
-    m: int = 8,
-    k: int = 16,
-    max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 11,
-):
-    """Product-quantization codebooks: split d dims into ``m``
-    contiguous subspaces and k-means each (Jegou et al., "Product
-    Quantization for Nearest Neighbor Search", TPAMI 2011).
-
-    Returns ndarray [m, k, d/m]. All m subspace Lloyd's runs are FUSED
-    into one Arrow-batched corpus pass per iteration (a batch computes
-    all m argmin-assignments from the same decoded rows), so the fit
-    costs ``max_iter`` passes, not ``m * max_iter`` -- measured 4x on
-    the bench. Math is identical to m independent kmeans_fit runs:
-    per-subspace hash-sampled init (seed + j), mean update, empty
-    clusters keep their centroid, per-subspace freeze once the max
-    centroid shift drops below ``tol``. At 100 TB fit on a hash sample
-    (emb.filter(hash < thr)): fit is O(sample) while encode/search
-    stay full-corpus single-pass.
-    """
-    import numpy as np
-
-    d = len(emb.select(vec_col).first()[0])
-    if d % m:
-        raise ValueError(f"dims {d} not divisible by m={m}")
-    dsub = d // m
-    tol = 1e-6
-    # ONE hash-sampled init shared across subspaces (the standard PQ
-    # init: sample k vectors, slice each into its m subvectors) -- one
-    # TakeOrdered pass instead of m.
-    init = np.array(
-        [
-            r.centroid
-            for r in sorted(
-                hash_sampled_centroids(emb, k, id_col, vec_col, seed).collect(),
-                key=lambda r: r.centroid_id,
-            )
-        ],
-        dtype=np.float64,
-    )  # [k, d]
-    cents = np.stack(
-        [init[:, j * dsub : (j + 1) * dsub] for j in range(m)]
-    ).copy()  # [m, k, dsub]
-    spark = emb.sparkSession
-    data = emb.select(F.col(vec_col).alias("vec"))
-    active = np.ones(m, dtype=bool)
-    for _ in range(max_iter):
-        bc = spark.sparkContext.broadcast((cents, active.copy()))
-
-        def partials(batches):
-            import numpy as np
-            import pandas as pd
-
-            cb, act = bc.value  # [m, k, dsub], [m]
-            c_sq = (cb * cb).sum(axis=2)  # [m, k]
-            for pdf in batches:
-                x = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-                rows = []
-                for j in np.flatnonzero(act):
-                    xj = x[:, j * dsub : (j + 1) * dsub]
-                    d2 = (
-                        (xj * xj).sum(axis=1)[:, None]
-                        - 2.0 * (xj @ cb[j].T)
-                        + c_sq[j][None, :]
-                    )
-                    a = d2.argmin(axis=1)
-                    for cl in np.unique(a):
-                        msk = a == cl
-                        rows.append(
-                            {
-                                "sub": int(j),
-                                "cluster": int(cl),
-                                "n": int(msk.sum()),
-                                "s": xj[msk].sum(axis=0).tolist(),
-                            }
-                        )
-                yield pd.DataFrame(rows)
-
-        agg = data.mapInPandas(
-            partials, "sub int, cluster int, n long, s array<double>"
-        ).collect()
-        counts = np.zeros((m, k))
-        sums = np.zeros_like(cents)
-        for r in agg:
-            counts[r.sub, r.cluster] += r.n
-            sums[r.sub, r.cluster] += np.array(r.s)
-        bc.destroy()
-        new = cents.copy()  # empty clusters keep their old centroid
-        nz = counts > 0
-        new[nz] = sums[nz] / counts[nz][:, None]
-        for j in np.flatnonzero(active):
-            if float(np.abs(new[j] - cents[j]).max()) < tol:
-                active[j] = False
-        cents = new
-        if not active.any():
-            break
-    return cents  # [m, k, dsub]
-
-
-def pq_encode(
-    emb: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>): nearest-codeword index per subspace.
-
-    One Arrow pass, zero shuffle: the [m, k, d/m] codebook broadcasts
-    (a few KB) and each batch runs m vectorized argmin-distance
-    assignments. The 8-bit codes are the 100 TB story: a 64-dim
-    float32 corpus compresses 32x (256 B -> m bytes per vector), so
-    the search set fits in memory where raw vectors cannot.
-    """
-    import numpy as np
-
-    bc = emb.sparkSession.sparkContext.broadcast(
-        np.asarray(codebooks, dtype=np.float64)
-    )
-
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        cb = bc.value  # [m, k, dsub]
-        m, _, dsub = cb.shape
-        for pdf in batches:
-            x = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                xj = x[:, j * dsub : (j + 1) * dsub]
-                cj = cb[j]
-                d2 = (
-                    (xj * xj).sum(axis=1)[:, None]
-                    - 2.0 * (xj @ cj.T)
-                    + (cj * cj).sum(axis=1)[None, :]
-                )
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {"__id": pdf["__id"], "codes": list(codes)}
-            )
-
-    out = emb.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("vec")
-    ).mapInPandas(encode, "__id long, codes array<int>")
-    return out.select(F.col("__id").alias(id_col), "codes")
-
-
-def pq_topk(
-    emb: DataFrame,
-    codebooks,
-    *,
-    query_filter,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k by inner product over
-    PQ-encoded vectors: score(q, x) ~= sum_j <q_j, codeword(x_j)>.
-
-    Queries are exact (un-encoded) vectors precomputing an [m, k]
-    dot-product table each; scoring a candidate is m table lookups --
-    no float vector is ever read at search time. The scan side is the
-    encoded corpus (one Arrow pass, per-batch local top-k), followed
-    by a per-query global top-k over ~batches x k survivor rows; no
-    all-pairs join, no shuffle of the corpus.
-
-    Scores are deterministic (fixed m-term summation order), rounded
-    to 6dp with id tiebreaks -- the repo's ANN comparability recipe.
-    """
-    import numpy as np
-
-    spark = emb.sparkSession
-    cb = np.asarray(codebooks, dtype=np.float64)  # [m, k_codes, dsub]
-    m, _, dsub = cb.shape
-    q_rows = emb.filter(query_filter).select(id_col, vec_col).collect()
-    if not q_rows:
-        return spark.createDataFrame(
-            [], "q_id long, c_id long, score double, rank long"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    # tables[t, j, c] = <q_t restricted to subspace j, codeword c>
-    tables = np.einsum("tjd,jcd->tjc", q.reshape(len(q), m, dsub), cb)
-    bc = spark.sparkContext.broadcast((q_ids, tables))
-
-    encoded = pq_encode(emb, cb, id_col, vec_col)
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids, tabs = bc.value  # [nq], [nq, m, k]
-        nq = len(ids)
-        for pdf in batches:
-            codes = np.stack(pdf["codes"].to_numpy())  # [nb, m]
-            c_ids = pdf["__cid"].to_numpy()
-            # scores[t, i] = sum_j tabs[t, j, codes[i, j]]
-            scores = tabs[:, np.arange(codes.shape[1])[None, :], codes].sum(
-                axis=2
-            )  # [nq, nb]
-            # local top-k by the FINAL total order (6dp-rounded score
-            # desc, c_id asc): under a total order, per-batch top-k
-            # merge is exact, and the output cannot depend on batch
-            # boundaries -- raw-score argpartition could cut a tied
-            # low-c_id candidate when > slack candidates tie at 6dp.
-            # +1 slack covers the self-hit removed downstream.
-            scores_r = np.round(scores, 6)
-            top = min(len(c_ids), k + 1)
-            out_q, out_c, out_s = [], [], []
-            for t in range(len(ids)):
-                order = np.lexsort((c_ids, -scores_r[t]))[:top]
-                out_q.append(np.full(len(order), ids[t]))
-                out_c.append(c_ids[order])
-                out_s.append(scores[t][order])
-            rows = {
-                "q_id": np.concatenate(out_q),
-                "c_id": np.concatenate(out_c),
-                "score": np.concatenate(out_s),
-            }
-            yield pd.DataFrame(rows)
-
-    local = encoded.select(
-        F.col(id_col).alias("__cid"), "codes"
-    ).mapInPandas(score, "q_id long, c_id long, score double")
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("c_id")
-    )
-    return (
-        local.filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("score", F.round("score", 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "score", "rank")
-    )
-
-
 def pq_codes_stats(
     emb: DataFrame,
     *,
@@ -762,8 +338,8 @@ def pq_codes_stats(
     seed: int = 11,
 ) -> DataFrame:
     """Exact-decimal PQ encoding against STATIC codebooks (the shared
-    hash-sampled init sliced per subspace -- i.e. ``pq_fit`` at zero
-    Lloyd iterations): the SQL-expressible core of ``pq_encode``,
+    hash-sampled init sliced per subspace -- a PQ fit at zero Lloyd
+    iterations): the SQL-expressible core of PQ encoding,
     value-provable against the DuckDB oracle the way kmeans_step_stats
     proves the Lloyd assignment.
 
@@ -777,8 +353,7 @@ def pq_codes_stats(
     (id, sub) grain. The pre-r13 n x m x k candidate relation (two
     broadcast crossJoins + per-(vector, subspace) argmin window, k
     decimal folds per output row) is gone: exact folds drop 16x and
-    the window exchange/sort leave the plan, same per-row cost profile
-    as the production ``pq_encode``'s argmin, expressed declaratively.
+    the window exchange/sort leave the plan.
     """
     d = len(emb.select(vec_col).first()[0])
     if d % m:
@@ -836,10 +411,8 @@ def semantic_dedup(
     scoring O(n^2/k) prescreens -- total minimized at k ~ sqrt(n)
     (O(n^1.5)), NOT linear; the committed scale curve
     (.benchmarks/scale_curve.json) measures exactly this superlinear
-    growth with 100% planted-dup recovery at every size. At 100 TB,
-    swap the exact-decimal assignment (kept here for the oracle gate)
-    for `kmeans_predict`'s Arrow+BLAS pass -- same O(n*k) shape, ~2
-    orders cheaper constants -- and raise k toward sqrt(n).
+    growth with 100% planted-dup recovery at every size; raise k
+    toward sqrt(n) as the corpus grows.
 
     The keep rule is greedy in id order (an item is dropped iff a
     KEPT-or-dropped smaller-id near-dup exists), the order-free
@@ -971,8 +544,7 @@ def semantic_dedup(
 # (k*d tiny rows after map-side combine); the k-row centroid state is
 # localCheckpointed per round (the repo's iterative-loop house style,
 # bounding plan growth). The interpreted HOF distance fold is the
-# honest cost of exactness here -- for throughput-first clustering use
-# kmeans_fit (float64 BLAS, deterministic but engine-specific).
+# honest cost of exactness here.
 # ---------------------------------------------------------------------------
 
 FP_SCALE = 10_000
@@ -1211,7 +783,7 @@ def ivf_fixedpoint_topk(
     """IVF ANN over fixed-point k-means centroids, scored by EXACT
     integer squared distance (so the whole search -- probe choice,
     candidate set, ranking -- is engine-reproducible and full-oracle
-    gated, unlike the float-cosine ivf_kmeans_topk).
+    gated).
 
     Inverted lists keyed by nearest centroid (the bucket shuffle key);
     each query probes its ``nprobe`` nearest lists (ties to lowest
@@ -1398,7 +970,7 @@ def pq_fixedpoint(
     """Fixed-point product-quantization codebooks: slice the lattice-
     quantized vector into ``m`` contiguous subspaces and run the
     integer Lloyd loop in each (keys (sub, cid)); all subspaces share
-    the hash-pinned init sample, mirroring pq_fit. Returns
+    the hash-pinned init sample (the standard PQ init). Returns
     (sub int, cid int, c array<bigint>[dims/m]) -- fully reproducible,
     hence DuckDB-oracle-able end to end (fit + encode + ADC search).
     """

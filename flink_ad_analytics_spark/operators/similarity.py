@@ -70,25 +70,6 @@ def _norm(col: str) -> F.Column:
     return F.sqrt(_dot(col, col))
 
 
-def vector_norms(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, nrm): deterministic L2 norm per vector."""
-    return embeddings.select("vec_id", _norm("embedding").alias("nrm"))
-
-
-def _scored_pairs(
-    left: DataFrame, right: DataFrame, on: list[str] | None
-) -> DataFrame:
-    """Join vector rows and score with the in-row cosine fold. Both
-    inputs carry (<id alias>, <emb alias>, <pre-computed norm>)."""
-    joined = (
-        left.crossJoin(right) if not on else left.join(right, on)
-    )
-    return joined.withColumn(
-        "cosine",
-        F.round(_dot("q_emb", "c_emb") / (F.col("qn") * F.col("cn")), 6),
-    )
-
-
 def cosine_topk(
     embeddings: DataFrame,
     *,

@@ -860,7 +860,7 @@ def bpe_fit(
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges over the corpus.
 
-    Iterative like kmeans_fit: each merge is one job over the CACHED
+    Iterative like kmeans_fixedpoint: each merge is one job over the CACHED
     |vocab|-row symbol table (count pairs -> argmax with lexicographic
     tiebreak -> fold-apply), so cost is n_merges x O(|vocab|), corpus
     scanned once. The argmax is a 1-row TakeOrdered collect -- the

@@ -829,9 +829,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmeans_fixedpoint), which makes the whole 4-iteration Lloyd fit
     value-reproducible and upgrades this entry from the r2-r4
     rows-only gate to a full DuckDB oracle (the oracle replays the
-    recursion; r4 verdict item #5). The float64-BLAS kmeans_fit stays
-    as the throughput path, value-gated per-iteration by
-    q_kmeans_step/q_kmeans_update.
+    recursion; r4 verdict item #5).
 
     Output per cluster: size, majority planted label, purity, and the
     EXACT integer inertia (sum of lattice squared distances).
@@ -958,9 +956,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_kmeans_fit owns the training cost), candidates scored by EXACT integer
     squared distance, so probe choice, candidate membership and
     ranking are all engine-reproducible: a full DuckDB oracle replays
-    fit + probe + scan (upgraded from the r2-r4 rows-only gate; the
-    float-cosine ivf_kmeans_topk operator remains the throughput
-    serving path, recall-gated in test_clustering.py)."""
+    fit + probe + scan (upgraded from the r2-r4 rows-only gate)."""
     emb = load_table(spark, sf_dir, "embeddings")
     cent = _kmeans_fp_cached(emb, sf_dir, _KM_K, _KM_FP_ITERS, _KM_SEED)
     from .operators.clustering import ivf_fixedpoint_assign
@@ -2008,8 +2004,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so fit, encoding, the asymmetric distance table and the final
     ranking are all exact integer arithmetic and the entire search is
     replayed by a DuckDB recursive oracle (upgraded from the r2-r4
-    rows-only gate; the float pq_fit/pq_topk operators remain the
-    throughput path, recall-gated in test_clustering.py). Round 6:
+    rows-only gate). Round 6:
     codebooks AND the per-vector code relation are SERVED from
     persisted warehouse artifacts (_persisted_fit; both deterministic
     in corpus + hyperparameters, so the oracle replays them);

@@ -1,11 +1,12 @@
 """K-means family: convergence, determinism, planted-cluster recovery,
-and IVF-kmeans recall.
+IVF and PQ recall, and the exact-decimal oracle bridges.
 
 The fixture embeddings are isotropic (labels carry no geometric
 signal -- measured: same-label mean cosine 0.0016 vs 0.0003 across),
 so recovery/recall properties are asserted on PLANTED Gaussian
 clusters built in-test; the fixture table exercises convergence and
-determinism on realistic data.
+determinism on realistic data. Recall truth is exact squared L2 on
+the fixed-point lattice, the metric the IVF and PQ searches rank by.
 """
 
 from __future__ import annotations
@@ -15,12 +16,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_ad_analytics_spark.operators.clustering import (
+    FP_SCALE,
+    FP_SHIFT,
     hash_sampled_centroids,
-    ivf_kmeans_topk,
-    kmeans_fit,
-    kmeans_predict,
+    ivf_fixedpoint_topk,
+    kmeans_fixedpoint,
+    kmeans_fixedpoint_assign,
+    pq_fixedpoint,
+    pq_fixedpoint_codes,
+    pq_fixedpoint_topk,
 )
-from flink_ad_analytics_spark.operators.similarity import cosine_topk
 from flink_ad_analytics_spark.sources.batch import load_table
 from tests.conftest import SF_CORRECT
 
@@ -39,26 +44,51 @@ def _planted(spark, n_per=40, k=5, d=16, spread=0.05, seed=3):
     )
 
 
+def _l2_truth(df, queries, k):
+    """{q_id: exact top-k c_ids} by squared L2 on the fixed-point
+    lattice (ties to the lower id, self excluded) -- the ranking
+    ivf_fixedpoint_topk / pq_fixedpoint_topk approximate."""
+    rows = df.select("vec_id", "embedding").collect()
+    ids = np.array([r.vec_id for r in rows])
+    x = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
+    q = np.floor(x * FP_SCALE).astype(np.int64) + FP_SHIFT
+    truth = {}
+    for qid in queries:
+        d2 = ((q - q[ids == qid][0]) ** 2).sum(axis=1)
+        order = [i for i in np.lexsort((ids, d2)) if ids[i] != qid]
+        truth[qid] = set(ids[order[:k]].tolist())
+    return truth
+
+
+def _inertia(emb, cent) -> int:
+    return kmeans_fixedpoint_assign(emb, cent).agg(F.sum("dist2")).first()[0]
+
+
 def test_inertia_monotone_nonincreasing(spark):
+    """Exact, not approximate: the round-half-up centroid is the
+    integer point minimizing its members' squared distance, and the
+    previous centroid is an integer point too, so no Lloyd round on
+    the lattice can raise the inertia."""
     emb = load_table(spark, SF_CORRECT, "embeddings")
-    _, hist = kmeans_fit(emb, k=8, max_iter=6)
-    assert len(hist) >= 2
-    assert all(b <= a + 1e-9 for a, b in zip(hist, hist[1:]))
+    hist = [
+        _inertia(emb, kmeans_fixedpoint(emb, k=8, iters=i)) for i in range(4)
+    ]
+    assert all(b <= a for a, b in zip(hist, hist[1:])), hist
+    assert hist[-1] < hist[0]
 
 
 def test_fit_deterministic(spark):
     emb = load_table(spark, SF_CORRECT, "embeddings").limit(300)
-    c1, h1 = kmeans_fit(emb, k=6, max_iter=4)
-    c2, h2 = kmeans_fit(emb, k=6, max_iter=4)
-    assert np.array_equal(c1, c2)
-    assert h1 == h2
+    c1 = sorted(tuple(r) for r in kmeans_fixedpoint(emb, k=6, iters=4).collect())
+    c2 = sorted(tuple(r) for r in kmeans_fixedpoint(emb, k=6, iters=4).collect())
+    assert c1 == c2 and len(c1) == 6
 
 
 def test_recovers_planted_clusters(spark):
     df = _planted(spark)
-    cents, hist = kmeans_fit(df, k=5, max_iter=10, seed=11)
-    pred = kmeans_predict(df, cents)
-    joined = df.join(pred, "vec_id").groupBy("label", "cluster").count()
+    cent = kmeans_fixedpoint(df, k=5, iters=10, seed=11)
+    pred = kmeans_fixedpoint_assign(df, cent, extra=["label"])
+    joined = pred.groupBy("label", "cluster").count()
     per_label = {}
     for r in joined.collect():
         per_label.setdefault(r.label, []).append(r["count"])
@@ -72,13 +102,13 @@ def test_recovers_planted_clusters(spark):
 
 def test_ivf_kmeans_recall_on_clustered_data(spark):
     df = _planted(spark)
-    cents, _ = kmeans_fit(df, k=5, max_iter=10, seed=11)
+    cent = kmeans_fixedpoint(df, k=5, iters=10, seed=11)
     qf = F.col("vec_id") % 40 == 0  # one query per planted cluster
-    exact = cosine_topk(df, query_filter=qf, k=5)
-    approx = ivf_kmeans_topk(df, cents, query_filter=qf, k=5, nprobe=1)
-    truth = {(r.q_id, r.c_id) for r in exact.collect()}
+    approx = ivf_fixedpoint_topk(df, cent, query_filter=qf, k=5, nprobe=1)
+    truth = _l2_truth(df, range(0, 200, 40), 5)
     got = {(r.q_id, r.c_id) for r in approx.collect()}
-    recall = len(truth & got) / len(truth)
+    hits = sum(len({(q, c) for c in t} & got) for q, t in truth.items())
+    recall = hits / (5 * len(truth))  # measured 0.96
     assert recall >= 0.9, f"recall {recall}"
 
 
@@ -92,80 +122,108 @@ def test_hash_sampled_centroids_shape_and_determinism(spark):
 
 def test_empty_cluster_keeps_old_centroid(spark):
     # k larger than distinct points: some clusters must go empty and
-    # the fit must not NaN out
+    # carry their centroid instead of dropping out or going NULL
     rows = [(i, [float(i % 3), 0.0], 0) for i in range(12)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    cents, hist = kmeans_fit(df, k=8, max_iter=4)
-    assert not np.isnan(cents).any()
-    assert hist[-1] <= hist[0] + 1e-12
+    init_cent = kmeans_fixedpoint(df, k=8, iters=0)
+    init = {r.cid: list(r.c) for r in init_cent.collect()}
+    cent = kmeans_fixedpoint(df, k=8, iters=4)
+    final = {r.cid: r.c for r in cent.collect()}
+    assert sorted(final) == list(range(8))
+    assert all(c is not None and len(c) == 2 for c in final.values())
+    used = {r.cluster for r in kmeans_fixedpoint_assign(df, cent).collect()}
+    assert len(used) <= 3 < 8
+    assert all(list(final[c]) == init[c] for c in set(final) - used)
+    assert _inertia(df, cent) <= _inertia(df, init_cent)
 
 
 def test_update_stats_reproduce_first_iteration_centroids(spark):
-    """The decimal-exact update statistics must agree with the fused
-    Arrow pass: sum_x/n per (cluster, dim) == kmeans_fit's centroids
-    after ONE iteration (same init, same assignment) within float
-    tolerance -- tying the oracle bridge to the production path."""
-    import numpy as np
-
-    from flink_ad_analytics_spark.operators.clustering import (
-        kmeans_fit,
-        kmeans_update_stats,
-    )
-    from flink_ad_analytics_spark.sources.batch import load_table
-    from tests.conftest import SF_CORRECT
+    """The decimal-exact update statistics must agree with one plain
+    numpy Lloyd step from the same hash-sampled init: sum_x/n per
+    (cluster, dim) == the mean of each cluster's members within float
+    tolerance -- tying the oracle bridge to the textbook update."""
+    from flink_ad_analytics_spark.operators.clustering import kmeans_update_stats
 
     emb = load_table(spark, SF_CORRECT, "embeddings")
     k, seed = 6, 11
-    cents_1iter, _ = kmeans_fit(emb, k=k, max_iter=1, seed=seed)
+    init = np.array(
+        [
+            r.centroid
+            for r in sorted(
+                hash_sampled_centroids(emb, k, seed=seed).collect(),
+                key=lambda r: r.centroid_id,
+            )
+        ],
+        dtype=np.float64,
+    )
+    x = np.stack(
+        [np.asarray(r[0], dtype=np.float64) for r in emb.select("embedding").collect()]
+    )
+    a = ((x[:, None, :] - init[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    want = {
+        (int(c), pos): v
+        for c in np.unique(a)
+        for pos, v in enumerate(x[a == c].mean(axis=0))
+    }
     stats = kmeans_update_stats(emb, k=k, seed=seed).collect()
-    d = max(r["pos"] for r in stats) + 1
-    got = np.zeros((k, d))
-    for r in stats:
-        got[r["centroid_id"], r["pos"]] = r["sum_x"] / r["n_vecs"]
-    assert np.allclose(got, cents_1iter, atol=1e-9)
+    got = {(r["centroid_id"], r["pos"]): r["sum_x"] / r["n_vecs"] for r in stats}
+    assert got.keys() == want.keys()
+    assert np.allclose([got[key] for key in want], list(want.values()), atol=1e-9)
+
+
+def test_nonfinite_centroid_literal_raises(spark):
+    """A NaN embedding that lands in the hash-sampled init (k = row
+    count samples every row) must fail with the finite-input
+    precondition, not with a SQL analysis error on a printed `nan`."""
+    from flink_ad_analytics_spark.operators.clustering import kmeans_step_stats
+
+    rows = [(i, [float(i), 1.0]) for i in range(3)] + [(3, [float("nan"), 1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="finite"):
+        kmeans_step_stats(df, k=4)
 
 
 # -- product quantization --------------------------------------------------
 
 
-def test_pq_codes_shape_and_determinism(spark):
-    from flink_ad_analytics_spark.operators.clustering import pq_encode, pq_fit
+def _codes_by_vec(codes) -> dict:
+    out: dict = {}
+    for r in codes.collect():
+        out.setdefault(r.c_id, {})[r.sub] = r.code
+    return {v: [subs[j] for j in sorted(subs)] for v, subs in out.items()}
 
+
+def test_pq_codes_shape_and_determinism(spark):
     emb = load_table(spark, SF_CORRECT, "embeddings").limit(200)
-    books = pq_fit(emb, m=8, k=16, max_iter=3)
-    assert books.shape == (8, 16, 8)
-    c1 = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
-    c2 = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
-    assert c1 == c2
+    cb = pq_fixedpoint(emb, m=8, k=16, iters=3)
+    books = cb.collect()
+    assert sorted((r.sub, r.cid) for r in books) == [
+        (j, c) for j in range(8) for c in range(16)
+    ]
+    assert all(len(r.c) == 8 for r in books)
+    c1 = _codes_by_vec(pq_fixedpoint_codes(emb, cb, m=8))
+    c2 = _codes_by_vec(pq_fixedpoint_codes(emb, cb, m=8))
+    assert c1 == c2 and len(c1) == 200
     assert all(0 <= c < 16 for codes in c1.values() for c in codes)
     assert all(len(codes) == 8 for codes in c1.values())
 
 
-def test_pq_recall_vs_exact_inner_product(spark):
-    """ADC over PQ codes: the true top-5 inner-product neighbors must
+def test_pq_recall_vs_exact_l2(spark):
+    """ADC over PQ codes: the true top-5 squared-L2 neighbors must
     appear in the PQ top-20 (recall@R, the standard PQ criterion --
-    within a tight cluster the quantized dot can't micro-rank
+    within a tight cluster the quantized distance can't micro-rank
     near-identical neighbors, so recall@k=R is the honest gate), and
     every returned neighbor must come from the query's planted
-    cluster (measured 0.92 / 1.00 here)."""
-    from flink_ad_analytics_spark.operators.clustering import pq_fit, pq_topk
-
+    cluster (measured 0.80 / 1.00 here)."""
     df = _planted(spark, d=16)
-    books = pq_fit(df, m=4, k=16, max_iter=6, seed=11)
-    approx = pq_topk(
-        df, books, query_filter=F.col("vec_id") % 40 == 0, k=20
+    cb = pq_fixedpoint(df, m=4, k=16, iters=6, seed=11, dims=16)
+    approx = pq_fixedpoint_topk(
+        df, cb, query_filter=F.col("vec_id") % 40 == 0, k=20, m=4, dims=16
     ).collect()
 
-    rows = df.select("vec_id", "embedding", "label").collect()
-    ids = np.array([r.vec_id for r in rows])
-    x = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
-    label = {r.vec_id: r.label for r in rows}
+    label = {r.vec_id: r.label for r in df.select("vec_id", "label").collect()}
     hits = tot = pure = n_got = 0
-    for q in ids[ids % 40 == 0]:
-        qv = x[ids == q][0]
-        scores = x @ qv
-        scores[ids == q] = -np.inf
-        truth = set(ids[np.argsort(-scores, kind="stable")[:5]])
+    for q, truth in _l2_truth(df, range(0, 200, 40), 5).items():
         got = {r.c_id for r in approx if r.q_id == q}
         hits += len(truth & got)
         tot += 5
@@ -176,23 +234,17 @@ def test_pq_recall_vs_exact_inner_product(spark):
 
 
 def test_pq_dims_not_divisible_raises(spark):
-    from flink_ad_analytics_spark.operators.clustering import pq_fit
-
     emb = load_table(spark, SF_CORRECT, "embeddings").limit(50)
     with pytest.raises(ValueError):
-        pq_fit(emb, m=7, k=4, max_iter=1)
+        pq_fixedpoint(emb, m=7, k=4, iters=1)
 
 
 def test_pq_codes_stats_match_production_encoder(spark):
     """The decimal-exact SQL encoding (pq_codes_stats, the oracle
-    bridge) must agree with the production numpy pq_encode given the
-    SAME static codebooks -- tying the value-gated path to the fast
-    path, as kmeans_update's bridge ties the Lloyd halves."""
-    from flink_ad_analytics_spark.operators.clustering import (
-        hash_sampled_centroids,
-        pq_codes_stats,
-        pq_encode,
-    )
+    bridge) must agree with a plain numpy argmin encoder given the
+    SAME static codebooks -- tying the value-gated path to the
+    textbook encode, as kmeans_update's bridge ties the Lloyd halves."""
+    from flink_ad_analytics_spark.operators.clustering import pq_codes_stats
 
     emb = load_table(spark, SF_CORRECT, "embeddings")
     init = np.array(
@@ -205,10 +257,17 @@ def test_pq_codes_stats_match_production_encoder(spark):
         ],
         dtype=np.float64,
     )
-    books = np.stack([init[:, j * 8 : (j + 1) * 8] for j in range(8)])
-    fast = {
-        r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()
-    }
+    rows = emb.select("vec_id", "embedding").collect()
+    x = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
+    codes = np.stack(
+        [
+            ((x[:, None, j * 8 : (j + 1) * 8] - init[None, :, j * 8 : (j + 1) * 8])
+             ** 2).sum(axis=2).argmin(axis=1)
+            for j in range(8)
+        ],
+        axis=1,
+    )
+    fast = {r.vec_id: codes[i].tolist() for i, r in enumerate(rows)}
     exact = {}
     for r in pq_codes_stats(emb, m=8, k=16, seed=11).collect():
         exact.setdefault(r.vec_id, [0] * 8)[r.sub] = r.code
